@@ -1,0 +1,7 @@
+import os
+import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+# the benchmark's modules import each other by bare name (run.py is a
+# script), and the engine lives at the repository root
+sys.path[:0] = [os.path.dirname(HERE), os.path.dirname(os.path.dirname(HERE))]
