@@ -192,6 +192,13 @@ def k_geomfromwkb(s: pd.Series) -> pd.Series:
     return pd.Series(out, dtype=object)
 
 
+def _nan_rows(*cols: pd.Series) -> np.ndarray:
+    """Rows where any double input is NaN.  pandas hands SQL NULL doubles
+    to kernels as NaN, so a constructor maps these rows to NULL."""
+    return np.logical_or.reduce(
+        [np.isnan(c.to_numpy(dtype=np.float64)) for c in cols])
+
+
 def k_point(xs: pd.Series, ys: pd.Series) -> pd.Series:
     x = xs.to_numpy(dtype=np.float64)
     y = ys.to_numpy(dtype=np.float64)
@@ -204,11 +211,9 @@ def k_point(xs: pd.Series, ys: pd.Series) -> pd.Series:
 
 
 def k_pointz(xs, ys, zs) -> pd.Series:
-    n = len(xs)
     out = []
-    for i in range(n):
-        x, y, z = xs.iloc[i], ys.iloc[i], zs.iloc[i]
-        if x is None or y is None or z is None:
+    for x, y, z, null in zip(xs, ys, zs, _nan_rows(xs, ys, zs)):
+        if null:
             out.append(None)
         else:
             out.append(core.to_wkb(make_point(float(x), float(y), float(z))))
@@ -216,11 +221,9 @@ def k_pointz(xs, ys, zs) -> pd.Series:
 
 
 def k_makeenvelope(x0, y0, x1, y1) -> pd.Series:
-    n = len(x0)
     out = []
-    for i in range(n):
-        a, b, c, d = x0.iloc[i], y0.iloc[i], x1.iloc[i], y1.iloc[i]
-        if any(v is None for v in (a, b, c, d)):
+    for a, b, c, d, null in zip(x0, y0, x1, y1, _nan_rows(x0, y0, x1, y1)):
+        if null:
             out.append(None)
         else:
             out.append(core.to_wkb(alg.box_polygon(float(a), float(b), float(c), float(d))))

@@ -18,8 +18,8 @@ import pandas as pd
 from pyspark.sql import types as T
 
 from sedona_db_spark.functions.kernels import (
-    BIN, BOOL, DBL, INT, STR, KERNELS, _binary, _coerce, _decode, _unary,
-    _unary_geom,
+    BIN, BOOL, DBL, INT, STR, KERNELS, _binary, _coerce, _decode, _nan_rows,
+    _unary, _unary_geom,
 )
 from sedona_db_spark.geom import algorithms as alg
 from sedona_db_spark.geom import algorithms2 as alg2
@@ -79,8 +79,8 @@ def _k_zm_minmax(which: str, mode):
 
 def k_pointm(xs, ys, ms) -> pd.Series:
     out = []
-    for x, y, m in zip(xs, ys, ms):
-        if x is None or y is None or m is None:
+    for x, y, m, null in zip(xs, ys, ms, _nan_rows(xs, ys, ms)):
+        if null:
             out.append(None)
         else:
             out.append(core.to_wkb(make_point(float(x), float(y), None, float(m))))
@@ -89,8 +89,8 @@ def k_pointm(xs, ys, ms) -> pd.Series:
 
 def k_pointzm(xs, ys, zs, ms) -> pd.Series:
     out = []
-    for x, y, z, m in zip(xs, ys, zs, ms):
-        if None in (x, y, z, m):
+    for x, y, z, m, null in zip(xs, ys, zs, ms, _nan_rows(xs, ys, zs, ms)):
+        if null:
             out.append(None)
         else:
             out.append(core.to_wkb(make_point(float(x), float(y), float(z), float(m))))

@@ -22,7 +22,7 @@ import numpy as np
 import pandas as pd
 
 from sedona_db_spark.functions.kernels import (
-    BIN, DBL, KERNELS, _coerce, _decode,
+    BIN, DBL, KERNELS, _coerce, _decode, _nan_rows,
 )
 from sedona_db_spark.functions.kernels_wave3 import _force_dims
 from sedona_db_spark.geom import algorithms as alg
@@ -300,8 +300,8 @@ def k_point_crs(x: pd.Series, y: pd.Series, crs) -> pd.Series:
     n = len(x)
     cv = _coerce(crs, n)
     out = []
-    for xx, yy, c in zip(x, y, cv):
-        if xx is None or yy is None or c is None:
+    for xx, yy, c, null in zip(x, y, cv, _nan_rows(x, y)):
+        if null or c is None:
             out.append(None)
             continue
         g = core.make_point(float(xx), float(yy))

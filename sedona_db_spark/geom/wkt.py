@@ -8,6 +8,7 @@ all seven geometry types, EMPTY at any level, Z/M/ZM suffixes, EWKT
 
 from __future__ import annotations
 
+import math
 import re
 
 import numpy as np
@@ -17,7 +18,8 @@ from sedona_db_spark.geom.core import (
     MULTIPOLYGON, POINT, POLYGON, Geom, _NAME_TYPES,
 )
 
-_TOKEN = re.compile(r"\s*([A-Za-z]+|\(|\)|,|-?[0-9+\-.eE]+)")
+# words carry an optional minus for "-Inf"
+_TOKEN = re.compile(r"\s*(-?[A-Za-z]+|\(|\)|,|-?[0-9+\-.eE]+)")
 
 
 class _Tokens:
@@ -187,6 +189,9 @@ def _parse_ring_list(tk, k, has_z, has_m):
 # ---------------------------------------------------------------------
 
 def _fmt_num(v: float) -> str:
+    if not math.isfinite(v):
+        # GEOS spellings; from_wkt reads them back
+        return "NaN" if math.isnan(v) else ("Inf" if v > 0 else "-Inf")
     if v == int(v) and abs(v) < 1e15:
         return str(int(v))
     return repr(float(v))

@@ -51,6 +51,10 @@ _DEFAULT_CONFS = {
     # broadcast/shuffle serialization path
     "spark.locality.wait": "0s",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
+    # UDF tasks run in forks of the engine's worker daemon
+    # (worker_daemon.py): start-up archives are not re-read per task and
+    # the inherited heap is frozen
+    "spark.python.daemon.module": "sedona_db_spark.worker_daemon",
     # NOTE: spark.sql.execution.pythonUDF.arrow.enabled was measured 2-3x
     # SLOWER on this suite (text/dedup queries) and is left at default.
 }
@@ -116,27 +120,26 @@ def register_all(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# Confs that are runtime-settable (plain SQL confs) and must hold even when
-# the caller built a bare SparkSession themselves (e.g. the external driver).
-_RUNTIME_CONFS = {
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # see the open-cost note in _DEFAULT_CONFS (runtime-settable SQL conf)
-    "spark.sql.files.openCostInBytes": str(512 * 1024),
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.parquet.filterPushdown": "true",
-    # 24 MB: small dims (nation/region/customer at bench SFs) still
-    # broadcast, but AQE can no longer convert a multi-million-row fact
-    # side into a driver-built hash relation (observed: 6M-row lineitem
-    # broadcast at 64 MB turned TPC-H Q3 into a 6 s driver stall).
-    # Operators that KNOW a side is small use explicit F.broadcast(),
-    # which bypasses this threshold.
-    "spark.sql.autoBroadcastJoinThreshold": str(24 * 1024 * 1024),
-}
+# Keys of ``_DEFAULT_CONFS`` that are runtime-settable SQL confs: they
+# must hold even when the caller built a bare SparkSession themselves
+# (e.g. a caller of ``__spark_entry__``), so ``apply_runtime_confs`` sets
+# them there.
+# Static confs stay out: ``spark.python.daemon.module`` only takes effect
+# when the SparkContext starts, so ``apply_runtime_confs`` cannot reach a
+# bare session built elsewhere, which runs PySpark's stock worker daemon.
+_RUNTIME_KEYS = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.adaptive.coalescePartitions.enabled",
+    "spark.sql.adaptive.skewJoin.enabled",
+    "spark.sql.execution.arrow.pyspark.enabled",
+    "spark.sql.execution.arrow.maxRecordsPerBatch",
+    "spark.sql.session.timeZone",
+    "spark.sql.parquet.filterPushdown",
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+_RUNTIME_CONFS = {k: _DEFAULT_CONFS[k] for k in _RUNTIME_KEYS}
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:

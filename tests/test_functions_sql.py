@@ -69,6 +69,19 @@ def test_null_in_null_out(spark):
              ST_Intersects(NULL, ST_Point(1.0, 2.0)) AS i
     """).first()
     assert row["a"] is None and row["d"] is None and row["x"] is None and row["i"] is None
+    # pandas hands NULL doubles to constructors as NaN: still NULL out,
+    # so a downstream ST_AsText sees NULL, not a NaN-coordinate geometry
+    n = "CAST(NULL AS DOUBLE)"
+    ctors = {
+        "pz": f"ST_PointZ(1.0, {n}, 3.0)",
+        "pm": f"ST_PointM({n}, 2.0, 3.0)",
+        "pzm": f"ST_PointZM(1.0, 2.0, 3.0, {n})",
+        "pc": f"ST_PointCrs(1.0, {n}, 'EPSG:4326')",
+        "env": f"ST_MakeEnvelope(0.0, 0.0, {n}, 1.0)",
+    }
+    row = spark.sql("SELECT " + ", ".join(
+        f"{e} AS {k}, ST_AsText({e}) AS {k}_wkt" for k, e in ctors.items())).first()
+    assert all(v is None for v in row), row
 
 
 def test_buffer_and_hull(spark):

@@ -37,6 +37,16 @@ def test_wkt_wkb_roundtrip(text):
     assert wkt.to_wkt(core.from_wkb(core.to_wkb(g))) == text
 
 
+def test_wkt_non_finite_coordinates_roundtrip():
+    """NaN and +/-inf ordinates write as GEOS spells them and read back."""
+    g = core.from_wkb(core.to_wkb(core.Geom(
+        core.LINESTRING, np.array([[math.nan, 1.0], [math.inf, -math.inf]]))))
+    text = wkt.to_wkt(g)
+    assert text == "LINESTRING (NaN 1, Inf -Inf)"
+    np.testing.assert_array_equal(W(text).data, g.data)
+    assert wkt.to_wkt(W("POINT Z (-Inf 2 NaN)")) == "POINT Z (-Inf 2 NaN)"
+
+
 def test_ewkb_srid_roundtrip():
     g = W("SRID=4326;POINT (1 2)")
     assert g.srid == 4326

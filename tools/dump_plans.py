@@ -1,9 +1,11 @@
-"""Dump .explain("formatted") for declared queries to plans/r11/.
+"""Dump .explain("formatted") for declared queries to a directory.
 
-Usage: python tools/dump_plans.py <suffix> [query ...]
-Writes plans/r11/<query>_<suffix>.txt for each named query (default: all
-bench HEADLINE queries).  Runs at $SPARK_GRAFT_SF_DIR (default sf0.1)
-so plans match the bench's AQE/stats decisions.
+Usage: python tools/dump_plans.py <out_dir> <suffix> [query ...]
+Writes <out_dir>/<query>_<suffix>.txt for each named query (default:
+every declared query of __spark_entry__.queries()).  Runs at
+$SPARK_GRAFT_SF_DIR (default sf0.1) so plans match the bench's AQE/stats
+decisions.  Dump a tree before and after a change, then
+``diff -r before/ after/`` shows every plan the change moved.
 """
 
 from __future__ import annotations
@@ -15,22 +17,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 3:
+        raise SystemExit(__doc__)
+    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     import __spark_entry__ as entrymod
-    from bench import HEADLINE
     from sedona_db_spark import get_spark
 
     spark = get_spark("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     entrymod._prep(spark, sf_dir)
     qs = entrymod.queries()
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r11")
     os.makedirs(out_dir, exist_ok=True)
-    for name in names or HEADLINE:
+    for name in names or qs:
         df = qs[name](spark, sf_dir)
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
