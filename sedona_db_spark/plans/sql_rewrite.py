@@ -41,6 +41,7 @@ Spark's own.
 from __future__ import annotations
 
 import hashlib
+import json
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -63,19 +64,29 @@ _TOKEN_RE = re.compile(
 )
 
 
-def _tokenize(sql: str) -> list[str] | None:
-    """SQL -> token list (whitespace/comments dropped).  None on oddities."""
-    toks = []
+def _tokenize_spans(sql: str):
+    """SQL -> (tokens, their (start, end) char spans in ``sql``), with
+    whitespace/comments dropped; (None, None) on oddities.  The spans let
+    rewrites splice replacements into the source string — token
+    re-rendering drops comments, and with them any /*+ ... */ join
+    hints the query depends on."""
+    toks, spans = [], []
     pos = 0
     for m in _TOKEN_RE.finditer(sql):
         if m.start() != pos:
-            return None
+            return None, None
         pos = m.end()
         if m.lastgroup != "ws":
             toks.append(m.group())
+            spans.append((m.start(), m.end()))
     if pos != len(sql):
-        return None
-    return toks
+        return None, None
+    return toks, spans
+
+
+def _tokenize(sql: str) -> list[str] | None:
+    """SQL -> token list (whitespace/comments dropped).  None on oddities."""
+    return _tokenize_spans(sql)[0]
 
 
 def _render(toks: list[str]) -> str:
@@ -181,6 +192,19 @@ def _depths(toks: list[str]) -> list[int]:
     return out
 
 
+def _close_paren(toks: list[str], i: int) -> int | None:
+    """Index of the ")" matching the "(" at toks[i], or None."""
+    d = 0
+    for j in range(i, len(toks)):
+        if toks[j] == "(":
+            d += 1
+        elif toks[j] == ")":
+            d -= 1
+            if d == 0:
+                return j
+    return None
+
+
 def _is_ident(t: str) -> bool:
     return bool(re.fullmatch(r"[A-Za-z_][A-Za-z_0-9]*", t)) or (
         t[:1] in "`\"" and len(t) >= 2)
@@ -200,17 +224,8 @@ def _parse_rel(toks: list[str], i: int) -> tuple[_Rel, int]:
     if i >= n:
         raise _Decline
     if toks[i] == "(":
-        d = 0
-        j = i
-        while j < n:
-            if toks[j] == "(":
-                d += 1
-            elif toks[j] == ")":
-                d -= 1
-                if d == 0:
-                    break
-            j += 1
-        if j >= n:
+        j = _close_paren(toks, i)
+        if j is None:
             raise _Decline
         body = _render(toks[i + 1:j])
         j += 1
@@ -787,7 +802,7 @@ def _rewrite(spark, sql, toks, vanilla_sql):
     # thread them into the operator: that side's bbox pruning column
     # and the codegen dwithin refine come straight from the stored
     # doubles (no Python bbox pass), refine conjuncts substitute them
-    # via _subst_certified_calls, and — when nothing else references
+    # via _point_call_edits, and — when nothing else references
     # the geometry — its ST_Point constructor prunes out of the plan
     # entirely.
     geom_by_alias = {a: c for a, c in zip(spatial.arg_rels,
@@ -870,13 +885,24 @@ def _rewrite(spark, sql, toks, vanilla_sql):
         sxy2 = (rmap.get(sxy2[0], sxy2[0]), rmap.get(sxy2[1], sxy2[1]))
 
     def _map_span(lo, hi):
-        """map_refs over a conjunct span, with certified-scalar calls
-        substituted by native shadow arithmetic first (round 12)."""
+        """map_refs over a conjunct span, with point calls over certified
+        shadows substituted by native arithmetic first.  The emitted
+        shadow references stay alias-qualified (``a . px``) so map_refs
+        renames them onto the joined view."""
         seg = toks[lo:hi]
+
+        def pt_xy(a, b):
+            q = _qualified_ref(seg, a, b, aliases, schemas)
+            xy = shadows.get(q[0], {}).get(q[1]) if q is not None else None
+            if xy is None:
+                return None
+            return tuple(_shadow_cast_sql(f"{q[0]} . {c}") for c in xy)
+
         if shadows:
-            sub = _subst_certified_calls(seg, shadows, aliases, schemas)
-            if sub is not None:
-                seg = sub
+            edits = _point_call_edits(seg, pt_xy,
+                                      lambda a, b: _render(seg[a:b]))
+            for i, j, repl in reversed(edits):
+                seg[i:j + 1] = _tokenize(repl)
         return map_refs(seg)
 
     if spatial.dist_col is not None:
@@ -1966,16 +1992,8 @@ def rewrite_relate_pattern(sql: str) -> str | None:
                     or i + 1 >= len(toks) or toks[i + 1] != "(":
                 i += 1
                 continue
-            d, j = 0, i + 1
-            while j < len(toks):
-                if toks[j] == "(":
-                    d += 1
-                elif toks[j] == ")":
-                    d -= 1
-                    if d == 0:
-                        break
-                j += 1
-            if j >= len(toks):
+            j = _close_paren(toks, i + 1)
+            if j is None:
                 i += 1
                 continue
             spans = _split_args(toks, i + 2, j)
@@ -2012,7 +2030,7 @@ def rewrite_relate_pattern(sql: str) -> str | None:
 # the engine's own haversine (kernels.k_distance_sphere /
 # algorithms._EARTH_RADIUS_M) restated in Spark built-ins; java.lang.Math
 # and numpy agree to the ulp on these inputs and every contract query
-# rounds its output, so the peephole is value-equivalent.  The min(1, .)
+# rounds its output, so the rewrite is value-equivalent.  The min(1, .)
 # clamp is a CASE, NOT LEAST: Spark's LEAST ignores NULL arguments,
 # which would break the kernels' NULL-in-NULL-out contract (the CASE's
 # NULL condition falls through to the ELSE, where NULL propagates).
@@ -2032,40 +2050,66 @@ _EUCLID_SQL = ("( SQRT ( POW ( ( {lon2} ) - ( {lon1} ) , 2 ) "
 _CERT_PRECHECK = re.compile(
     r"\bST_(DISTANCESPHERE|DISTANCE|DWITHIN|X|Y)\s*\(", re.I)
 
-
-def _tokenize_spans(sql: str):
-    """Like _tokenize but also returns each token's (start, end) char
-    span in the ORIGINAL text, so rewrites can splice replacements into
-    the source string — token re-rendering drops comments, and with
-    them any /*+ ... */ join hints the query depends on."""
-    toks, spans = [], []
-    pos = 0
-    for m in _TOKEN_RE.finditer(sql):
-        if m.start() != pos:
-            return None, None
-        pos = m.end()
-        if m.lastgroup != "ws":
-            toks.append(m.group())
-            spans.append((m.start(), m.end()))
-    if pos != len(sql):
-        return None, None
-    return toks, spans
+# point call -> arity: ST_X/ST_Y take one point, the distance family two
+# (ST_DWithin's third argument is the radius)
+_POINT_CALLS = {"ST_X": 1, "ST_Y": 1, "ST_DISTANCE": 2,
+                "ST_DISTANCESPHERE": 2, "ST_DWITHIN": 3}
+_PEEP_CALLS = {k: v for k, v in _POINT_CALLS.items() if v > 1}
 
 
-def _point_table_cols(spark, table: str) -> list[str]:
-    """Certified point columns of a stored table (write-time-verified
-    property stamped by certify_point_table), [] when absent."""
-    import json as _json
-    try:
-        row = spark.sql(
-            f"SHOW TBLPROPERTIES {table} ('sedona.point.cols')").first()
-        val = row["value"] if row is not None else None
-        if not val or val.startswith("Table") or "does not have" in val:
+def _point_call_edits(toks, pt_xy, arg_sql, calls=_POINT_CALLS):
+    """The one rewriter of point calls into codegen arithmetic.
+
+    Each call in ``calls`` whose point arguments all resolve through
+    ``pt_xy(lo, hi) -> (x_sql, y_sql) | None`` becomes native SQL: ST_X/
+    ST_Y the coordinate itself, ST_Distance/ST_DistanceSphere the
+    sqrt/haversine formula, ST_DWithin the kernel's ``r <= d + 1e-12``
+    boundary (algorithms.dwithin _EPS) with the radius rendered by
+    ``arg_sql(lo, hi)``.  The callers differ only in their coordinate
+    source: constructor arguments (peephole_scalar), certified shadow
+    columns or WKB bit extraction (rewrite_certified_scalar), and
+    alias-qualified shadows (the join lattice's refines).  Returns the
+    edits ``[(i, j, sql)]``: tokens ``i..j`` (call name through closing
+    paren) become ``sql``.  Calls that do not resolve stay, and the
+    scan continues inside them."""
+    edits = []
+    i, n = 0, len(toks)
+    while i < n:
+        name = toks[i].upper()
+        if name not in calls or i + 1 >= n or toks[i + 1] != "(":
+            i += 1
+            continue
+        j = _close_paren(toks, i + 1)
+        if j is None:
             return []
-        out = _json.loads(val)
-        return out if isinstance(out, list) else []
-    except Exception:
-        return []
+        args = _split_args(toks, i + 2, j)
+        if args is None or len(args) != calls[name]:
+            i += 1
+            continue
+        xys = [pt_xy(*a) for a in args[:2]]
+        if any(xy is None for xy in xys):
+            i += 1
+            continue
+        if name in ("ST_X", "ST_Y"):
+            repl = xys[0][name == "ST_Y"]
+        else:
+            (lon1, lat1), (lon2, lat2) = xys
+            fmt = _HAVERSINE_SQL if name == "ST_DISTANCESPHERE" \
+                else _EUCLID_SQL
+            repl = fmt.format(lon1=lon1, lat1=lat1, lon2=lon2, lat2=lat2)
+            if name == "ST_DWITHIN":
+                repl = f"( {repl} <= ( ( {arg_sql(*args[2])} ) + 1e-12 ) )"
+        edits.append((i, j, repl))
+        i = j + 1
+    return edits
+
+
+def _splice(sql: str, spans, edits) -> str | None:
+    """Apply token edits to the ORIGINAL text (comments and /*+ ... */
+    hints survive, unlike a token re-render); None when no edit."""
+    for i, j, repl in reversed(edits):
+        sql = sql[:spans[i][0]] + repl + sql[spans[j][1]:]
+    return sql if edits else None
 
 
 def _shadow_cast_sql(col: str) -> str:
@@ -2076,7 +2120,23 @@ def _shadow_cast_sql(col: str) -> str:
     return f"CAST({col} AS DOUBLE)"
 
 
-def _point_cert_checks(cols, shadow):
+# ----------------------------------------------------------------------
+# point certificates: planar (certify_point_table / certify_point_view)
+# and geography (certify_geog_point_view)
+# ----------------------------------------------------------------------
+
+# geography edge tag in the WKB type word (core._SD_GEOG): byte 4 of a
+# little-endian 2-D point header
+_GEOG_PT_HEADER_HEX = "0101000010"
+
+
+def _geog_point_guard_sql(col: str) -> str:
+    """Boolean SQL: ``col`` is a 21-byte LE geography-tagged 2D point."""
+    return (f"(length({col}) = 21 AND "
+            f"substring({col}, 1, 5) = X'{_GEOG_PT_HEADER_HEX}')")
+
+
+def _point_cert_checks(cols, shadow, geog=False):
     """Per-column bad-row predicates for point certification (one
     scan).  The cheap native guard (length + header bytes) proves
     21-byte LE point WKB; the VECTORIZED ST_X/ST_Y kernels prove the
@@ -2089,11 +2149,16 @@ def _point_cert_checks(cols, shadow):
     bit-for-bit: SQL `=` plus a string-form sign-of-zero refinement
     ("-0.0" vs "0.0"; division tricks throw under ANSI mode), and NULL
     geometry rows must have NULL shadows so substitution preserves
-    kernel NULL semantics."""
+    kernel NULL semantics.  ``geog`` checks geography points: the
+    header carries the geography tag, and ``abs(lat) < 90 - 1e-9`` —
+    the pole band takes the cover kernel's general (degenerate-
+    longitude) path, which the native single-cell formula does not
+    reproduce, so certification fails there."""
     from sedona_db_spark.plans.native_point import point_guard_sql
+    guard = _geog_point_guard_sql if geog else point_guard_sql
     checks = []
     for i, c in enumerate(cols):
-        ok = (f"({point_guard_sql(c)} AND ST_X({c}) IS NOT NULL "
+        ok = (f"({guard(c)} AND ST_X({c}) IS NOT NULL "
               f"AND ST_Y({c}) IS NOT NULL")
         if shadow and c in shadow:
             # the shadow may be stored as DECIMAL (e.g. decimal-typed
@@ -2109,14 +2174,17 @@ def _point_cert_checks(cols, shadow):
             null_ok = f"({c} IS NULL AND {xc} IS NULL AND {yc} IS NULL)"
         else:
             null_ok = f"{c} IS NULL"
+        if geog:
+            ok += f" AND abs(ST_Y({c})) < 90.0D - 1.0e-9"
         ok += ")"
         checks.append(f"sum(CASE WHEN NOT ({null_ok} OR {ok}) "
                       f"THEN 1 ELSE 0 END) AS bad_{i}")
     return checks
 
 
-def _point_cert_scan(spark, relation: str, cols, shadow, what: str):
-    checks = _point_cert_checks(cols, shadow)
+def _point_cert_scan(spark, relation: str, cols, shadow, what: str,
+                     geog=False):
+    checks = _point_cert_checks(cols, shadow, geog)
     row = spark.sql(
         f"SELECT {', '.join(checks)} FROM {relation}").first()
     for i, c in enumerate(cols):
@@ -2124,7 +2192,9 @@ def _point_cert_scan(spark, relation: str, cols, shadow, what: str):
         if bad:
             raise ValueError(
                 f"{what}({relation}): column {c} has {bad} rows that "
-                f"are not NaN-free 2D LE point WKB"
+                "are not "
+                + ("non-pole geography-tagged " if geog else "")
+                + "NaN-free 2D LE point WKB"
                 + (" with bit-equal shadow coordinates"
                    if shadow and c in shadow else "")
                 + " — refusing to stamp the certificate")
@@ -2144,106 +2214,85 @@ def certify_point_table(spark, table: str, cols: list[str],
     extraction measured ~10 us/row).  Raises if any row violates —
     never stamps a lie."""
     _point_cert_scan(spark, table, cols, shadow, "certify_point_table")
-    import json as _json
-    val = _json.dumps(cols).replace("'", "''")
-    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES "
-              f"('sedona.point.cols' = '{val}')")
+    props = {"sedona.point.cols": cols}
     if shadow:
-        sval = _json.dumps({c: list(xy) for c, xy in shadow.items()}) \
-            .replace("'", "''")
+        props["sedona.point.shadow"] = {c: list(xy)
+                                        for c, xy in shadow.items()}
+    for key, val in props.items():
+        val = json.dumps(val).replace("'", "''")
         spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES "
-                  f"('sedona.point.shadow' = '{sval}')")
+                  f"('{key}' = '{val}')")
+
+
+def _point_table_prop(spark, table: str, key: str):
+    """The JSON value certify_point_table stamped under
+    ``sedona.point.<key>`` (``cols`` | ``shadow``), or None when the
+    relation has no such property (temp views included)."""
+    try:
+        row = spark.sql(
+            f"SHOW TBLPROPERTIES {table} ('sedona.point.{key}')").first()
+        val = row["value"] if row is not None else None
+        if not val or val.startswith("Table") or "does not have" in val:
+            return None
+        return json.loads(val)
+    except Exception:
+        return None
 
 
 def certify_point_view(spark, view: str, shadow: dict) -> None:
     """certify_point_table for a (temp) view, which has no table
     properties: verify the same predicate in one scan, then register
-    the shadow map in a session-level dict keyed by the view's CURRENT
-    analyzed plan string — a later CREATE OR REPLACE changes the plan
-    text and silently invalidates the certificate (fail-closed)."""
-    cols = list(shadow)
-    _point_cert_scan(spark, view, cols, shadow, "certify_point_view")
-    fp = _view_fingerprint(spark, view)
-    if fp is None:
-        return
-    reg = getattr(spark, "_sedona_point_view_shadows", None)
-    if reg is None:
-        reg = {}
-        spark._sedona_point_view_shadows = reg
-    reg[view] = (dict(shadow), fp)
-
-
-# geography edge tag in the WKB type word (core._SD_GEOG): byte 4 of a
-# little-endian 2-D point header
-_GEOG_PT_HEADER_HEX = "0101000010"
-
-
-def _geog_point_guard_sql(col: str) -> str:
-    """Boolean SQL: ``col`` is a 21-byte LE geography-tagged 2D point."""
-    return (f"(length({col}) = 21 AND "
-            f"substring({col}, 1, 5) = X'{_GEOG_PT_HEADER_HEX}')")
+    the shadow map in the session's view-certificate registry (see
+    _view_cert_shadow)."""
+    _certify_view(spark, "point", view, shadow)
 
 
 def certify_geog_point_view(spark, view: str, shadow: dict) -> None:
-    """certify_point_view for GEOGRAPHY point columns (round 12): one
-    scan proves every non-null value of each ``shadow`` key is a
-    21-byte LE geography-TAGGED 2-D point WKB whose lon/lat are
-    bit-equal to the sibling ``(lon_col, lat_col)`` DOUBLE shadows
-    (sign-of-zero included), NULL geography rows have NULL shadows,
-    and ``abs(lat) < 90 - 1e-9`` — the pole band takes the cover
-    kernel's general (degenerate-longitude) path, which the native
-    single-cell formula does not reproduce, so certification FAILS
-    there rather than stamping a lie.  Raises on any violating row.
+    """certify_point_view for GEOGRAPHY point columns: one scan proves
+    every non-null value of each ``shadow`` key is a 21-byte LE
+    geography-TAGGED 2-D point WKB whose lon/lat are bit-equal to the
+    sibling ``(lon_col, lat_col)`` DOUBLE shadows (sign-of-zero
+    included), NULL geography rows have NULL shadows, and no point lies
+    in the pole band (_point_cert_checks).  Raises on any violating row.
 
     Consumers: geography_relation_join(left_lonlat=...) computes the
     probe side's covering cell, salt and refine inputs natively from
     the shadows, letting the geography constructor prune out of the
     plan entirely."""
-    checks = []
-    cols = list(shadow)
-    for i, c in enumerate(cols):
-        xc, yc = (_shadow_cast_sql(x) for x in shadow[c])
-        ok = (f"({_geog_point_guard_sql(c)} AND ST_X({c}) IS NOT NULL "
-              f"AND ST_Y({c}) IS NOT NULL"
-              f" AND ST_X({c}) = {xc} AND ST_Y({c}) = {yc}"
-              f" AND (ST_X({c}) != 0.0D OR CAST(ST_X({c}) AS STRING)"
-              f" = CAST({xc} AS STRING))"
-              f" AND (ST_Y({c}) != 0.0D OR CAST(ST_Y({c}) AS STRING)"
-              f" = CAST({yc} AS STRING))"
-              f" AND abs(ST_Y({c})) < 90.0D - 1.0e-9)")
-        null_ok = f"({c} IS NULL AND {xc} IS NULL AND {yc} IS NULL)"
-        checks.append(f"sum(CASE WHEN NOT ({null_ok} OR {ok}) "
-                      f"THEN 1 ELSE 0 END) AS bad_{i}")
-    row = spark.sql(f"SELECT {', '.join(checks)} FROM {view}").first()
-    for i, c in enumerate(cols):
-        if row[f"bad_{i}"]:
-            raise ValueError(
-                f"certify_geog_point_view({view}): column {c} has "
-                f"{row[f'bad_{i}']} rows that are not non-pole NaN-free "
-                "tagged 2D point WKB with bit-equal shadow coordinates "
-                "— refusing to stamp the certificate")
+    _certify_view(spark, "geog", view, shadow)
+
+
+def _certify_view(spark, kind: str, view: str, shadow: dict) -> None:
+    geog = kind == "geog"
+    _point_cert_scan(spark, view, list(shadow), shadow,
+                     "certify_geog_point_view" if geog
+                     else "certify_point_view", geog)
     fp = _view_fingerprint(spark, view)
     if fp is None:
         return
-    reg = getattr(spark, "_sedona_geog_point_view_shadows", None)
+    reg = getattr(spark, "_sedona_view_certs", None)
     if reg is None:
-        reg = {}
-        spark._sedona_geog_point_view_shadows = reg
-    reg[view] = (dict(shadow), fp)
+        reg = spark._sedona_view_certs = {}
+    reg[(kind, view)] = (dict(shadow), fp)
 
 
-def geog_shadow_xy_for_view(spark, view: str, col: str):
-    """Live certified geography shadow ``(lon_col, lat_col)`` for a
-    view's geography column, or None (fingerprint-checked: a CREATE OR
-    REPLACE that changes the view silently invalidates)."""
-    reg = getattr(spark, "_sedona_geog_point_view_shadows", None)
-    if not reg or view not in reg:
-        return None
-    shadow, fp = reg[view]
+def _view_cert_shadow(spark, kind: str, view: str, col: str):
+    """Live certified shadow ``(x_col, y_col)`` of a view's ``kind``
+    (``point`` | ``geog``) column, or None.  The registry keys each
+    certificate by the view's analyzed plan text at certify time, so a
+    later CREATE OR REPLACE that changes the view silently invalidates
+    it (fail-closed)."""
+    shadow, fp = getattr(spark, "_sedona_view_certs", {}).get(
+        (kind, view), ({}, None))
     if col not in shadow:
         return None
     cur = _view_fingerprint(spark, view)
     return tuple(shadow[col]) if cur is not None and cur == fp else None
+
+
+def geog_shadow_xy_for_view(spark, view: str, col: str):
+    """Live certified geography shadow ``(lon_col, lat_col)``, or None."""
+    return _view_cert_shadow(spark, "geog", view, col)
 
 
 def _view_fingerprint(spark, view: str) -> str | None:
@@ -2257,40 +2306,16 @@ def _view_fingerprint(spark, view: str) -> str | None:
     return re.sub(r"#\d+", "#", s)
 
 
-def _view_shadow(spark, table: str, col: str):
-    """(x_col, y_col) for a view column certified by
-    certify_point_view, if the view's plan is unchanged; else None."""
-    reg = getattr(spark, "_sedona_point_view_shadows", None)
-    if not reg or table not in reg:
-        return None
-    shadow, fp = reg[table]
-    if col not in shadow:
-        return None
-    cur = _view_fingerprint(spark, table)
-    return tuple(shadow[col]) if cur is not None and cur == fp else None
-
-
-def _point_table_shadow(spark, table: str, col: str):
-    """(x_col, y_col) from the stored shadow property, or None."""
-    import json as _json
-    try:
-        row = spark.sql(
-            f"SHOW TBLPROPERTIES {table} ('sedona.point.shadow')").first()
-        val = row["value"] if row is not None else None
-        if not val or val.startswith("Table") or "does not have" in val:
-            return None
-        m = _json.loads(val)
-        xy = m.get(col)
-        return tuple(xy) if isinstance(xy, list) and len(xy) == 2 else None
-    except Exception:
-        return None
-
-
 def _relation_shadow(spark, tbl: str, col: str):
     """Live certified shadow ``(x_col, y_col)`` for a named relation's
     point column, from the session view registry (fingerprint-checked)
     or the write-time table property — None when uncertified."""
-    return _view_shadow(spark, tbl, col) or _point_table_shadow(spark, tbl, col)
+    xy = _view_cert_shadow(spark, "point", tbl, col)
+    if xy is None:
+        m = _point_table_prop(spark, tbl, "shadow")
+        xy = m.get(col) if isinstance(m, dict) else None
+        xy = tuple(xy) if isinstance(xy, list) and len(xy) == 2 else None
+    return xy
 
 
 def _subquery_shadow_base(text: str) -> str | None:
@@ -2309,106 +2334,12 @@ def _subquery_shadow_base(text: str) -> str | None:
     return _unquote(t[3])
 
 
-def _subst_certified_calls(span: list[str], shadows: dict,
-                           aliases: tuple, schemas: dict) -> list[str] | None:
-    """Span-local certified-scalar substitution for the join rewrite's
-    refine conjuncts (round 12, extending the r11 scalar rewrite into
-    the lattice's refine position): ST_Distance / ST_DWithin / ST_X /
-    ST_Y calls whose geometry arguments are references to
-    shadow-certified point columns are replaced by the SAME native
-    arithmetic rewrite_certified_scalar emits — the shadow doubles
-    substitute the coordinates (bit-equal by certificate), sqrt-form
-    distance, the dwithin ``<= d + 1e-12`` kernel boundary.  Emitted
-    references stay alias-qualified token triples (``a . px``) so the
-    caller's map_refs pass renames them onto the joined view.
-
-    ``shadows``: alias -> {geom_col: (x_col, y_col)}.  Returns the new
-    token list, or None when nothing substituted (callers keep the
-    original span — the kernels stay exact for every shape this
-    declines).  ``aliases`` is the FULL alias tuple (not just the
-    shadow-bearing ones) so bare-column owner resolution matches the
-    main parser's."""
-
-    def pt_xy(lo, hi):
-        q = _qualified_ref(span, lo, hi, aliases, schemas)
-        if q is None:
-            return None
-        xy = shadows.get(q[0], {}).get(q[1])
-        if xy is None:
-            return None
-        return (f"CAST ( {q[0]} . {xy[0]} AS DOUBLE )",
-                f"CAST ( {q[0]} . {xy[1]} AS DOUBLE )")
-
-    out: list[str] = []
-    changed = False
-    i, n = 0, len(span)
-    while i < n:
-        u = span[i].upper()
-        if u in ("ST_DISTANCESPHERE", "ST_DISTANCE", "ST_DWITHIN",
-                 "ST_X", "ST_Y") and i + 1 < n and span[i + 1] == "(":
-            d, j = 0, i + 1
-            while j < n:
-                if span[j] == "(":
-                    d += 1
-                elif span[j] == ")":
-                    d -= 1
-                    if d == 0:
-                        break
-                j += 1
-            if j >= n:
-                return None
-            repl = None
-            if u in ("ST_X", "ST_Y"):
-                xy = pt_xy(i + 2, j)
-                if xy is not None:
-                    repl = xy[0] if u == "ST_X" else xy[1]
-            elif u == "ST_DWITHIN":
-                parts = _split_args(span, i + 2, j)
-                if parts is not None and len(parts) == 3:
-                    xy1, xy2 = pt_xy(*parts[0]), pt_xy(*parts[1])
-                    if xy1 is not None and xy2 is not None:
-                        dist = _render(span[parts[2][0]:parts[2][1]])
-                        repl = ("( " + _EUCLID_SQL.format(
-                            lon1=xy1[0], lat1=xy1[1],
-                            lon2=xy2[0], lat2=xy2[1])
-                            + f" <= ( ( {dist} ) + 1e-12 ) )")
-            else:
-                args = _split_two_args(span, i + 2, j)
-                if args is not None:
-                    xy1, xy2 = pt_xy(*args[0]), pt_xy(*args[1])
-                    if xy1 is not None and xy2 is not None:
-                        fmt = (_HAVERSINE_SQL if u == "ST_DISTANCESPHERE"
-                               else _EUCLID_SQL)
-                        repl = fmt.format(lon1=xy1[0], lat1=xy1[1],
-                                          lon2=xy2[0], lat2=xy2[1])
-            if repl is not None:
-                repl_toks = _tokenize(repl)
-                if repl_toks is None:
-                    return None
-                out.extend(repl_toks)
-                changed = True
-                i = j + 1
-                continue
-        out.append(span[i])
-        i += 1
-    return out if changed else None
-
-
 # WKB bit extraction is exact but costs ~10 us/row/coordinate in
 # interpreted string machinery (hex/conv/concat); above this estimated
 # relation size the rewrite declines extraction and leaves the
 # vectorized Arrow kernel in place (~4 us/row/pass).  Shadow columns
 # (zero decode cost) are preferred at ANY size and ignore this gate.
-_EXTRACT_MAX_BYTES_CONF = "spark.sedona.scalarRewrite.extractMaxBytes"
-_EXTRACT_MAX_BYTES_DEFAULT = 4 * 1024 * 1024
-
-
-def _rel_size_bytes(df) -> int | None:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return None
+_EXTRACT_MAX_BYTES = 4 << 20
 
 
 def rewrite_certified_scalar(spark, sql: str, vanilla_sql) -> str | None:
@@ -2423,11 +2354,11 @@ def rewrite_certified_scalar(spark, sql: str, vanilla_sql) -> str | None:
        cost scales (a stored-column scan reads 16 B/row).
     2. WKB BIT EXTRACTION (plans/native_point.py) — exact but ~10 us/
        row/coordinate of interpreted string machinery, so gated on the
-       relation's estimated size (spark.sedona.scalarRewrite.
-       extractMaxBytes, default 4 MiB); above the gate the vectorized
-       Arrow kernel stays.  Available when the table property names the
-       column or the relation's analyzed plan proves it is the 2-arg
-       ST_Point constructor's output (the r10 plan-time certificate).
+       relation's estimated size (_EXTRACT_MAX_BYTES, 4 MiB); above
+       the gate the vectorized Arrow kernel stays.  Available when the
+       table property names the column or the relation's analyzed plan
+       proves it is the 2-arg ST_Point constructor's output (the r10
+       plan-time certificate).
 
     Conservative: any alias ambiguity, subquery-sourced arg, or
     uncertified column leaves that call untouched.  Returns spliced SQL
@@ -2447,6 +2378,7 @@ def rewrite_certified_scalar(spark, sql: str, vanilla_sql) -> str | None:
         _point_constructor_certified)
     from sedona_db_spark.plans.native_point import (
         point_x_sql, point_y_sql)
+    from sedona_db_spark.plans.width import planned_size_bytes
     n = len(toks)
     # --- collect relations (any depth; duplicate/subquery alias poisons)
     rels: dict[str, str | None] = {}
@@ -2498,124 +2430,39 @@ def rewrite_certified_scalar(spark, sql: str, vanilla_sql) -> str | None:
         if key in cert_memo:
             return cert_memo[key]
         out = None
-        xy = _view_shadow(spark, tbl, col) \
-            or _point_table_shadow(spark, tbl, col)
+        xy = _relation_shadow(spark, tbl, col)
         if xy and xy[0] in schemas[alias] and xy[1] in schemas[alias]:
             out = ("shadow",) + tuple(xy)
         else:
-            ok = col in _point_table_cols(spark, tbl)
+            cols = _point_table_prop(spark, tbl, "cols")
+            ok = isinstance(cols, list) and col in cols
             if not ok:
                 try:
                     ok = _point_constructor_certified(dfs[alias], col)
                 except Exception:
                     ok = False
             if ok:
-                try:
-                    cap = int(spark.conf.get(
-                        _EXTRACT_MAX_BYTES_CONF,
-                        str(_EXTRACT_MAX_BYTES_DEFAULT)))
-                except Exception:
-                    cap = _EXTRACT_MAX_BYTES_DEFAULT
-                size = _rel_size_bytes(dfs[alias])
-                if size is not None and size <= cap:
+                size = planned_size_bytes(dfs[alias])
+                if size is not None and size <= _EXTRACT_MAX_BYTES:
                     out = ("extract",)
         cert_memo[key] = out
         return out
+
+    def text(lo, hi):
+        return sql[spans[lo][0]:spans[hi - 1][1]]
 
     def pt_xy(lo, hi):
         """Arg span -> (x_sql, y_sql) coordinate expressions of a
         certified point column ref, or None."""
         q = _qualified_ref(toks, lo, hi, rels, schemas)
-        if q is None:
-            return None
-        kind = cert_kind(*q)
+        kind = cert_kind(*q) if q is not None else None
         if kind is None:
             return None
-        alias = q[0]
         if kind[0] == "shadow":
-            return (_shadow_cast_sql(f"{alias}.{kind[1]}"),
-                    _shadow_cast_sql(f"{alias}.{kind[2]}"))
-        ref = sql[spans[lo][0]:spans[hi - 1][1]]
-        return (point_x_sql(ref), point_y_sql(ref))
+            return tuple(_shadow_cast_sql(f"{q[0]}.{c}") for c in kind[1:])
+        return (point_x_sql(text(lo, hi)), point_y_sql(text(lo, hi)))
 
-    # --- scan calls and build splice list
-    edits: list[tuple[int, int, str]] = []
-    i = 0
-    while i < n:
-        u = toks[i].upper()
-        if u in ("ST_DISTANCESPHERE", "ST_DISTANCE", "ST_DWITHIN",
-                 "ST_X", "ST_Y") and i + 1 < n and toks[i + 1] == "(":
-            d, j = 0, i + 1
-            while j < n:
-                if toks[j] == "(":
-                    d += 1
-                elif toks[j] == ")":
-                    d -= 1
-                    if d == 0:
-                        break
-                j += 1
-            if j >= n:
-                return None
-            repl = None
-            if u in ("ST_X", "ST_Y"):
-                xy = pt_xy(i + 2, j)
-                if xy is not None:
-                    repl = xy[0] if u == "ST_X" else xy[1]
-            elif u == "ST_DWITHIN":
-                parts = _split_args(toks, i + 2, j)
-                if parts is not None and len(parts) == 3:
-                    xy1 = pt_xy(*parts[0])
-                    xy2 = pt_xy(*parts[1])
-                    if xy1 is not None and xy2 is not None:
-                        dist = sql[spans[parts[2][0]][0]:
-                                   spans[parts[2][1] - 1][1]]
-                        # kernel boundary: r <= d + 1e-12 (_EPS)
-                        repl = ("( " + _EUCLID_SQL.format(
-                            lon1=xy1[0], lat1=xy1[1],
-                            lon2=xy2[0], lat2=xy2[1])
-                            + f" <= ( ( {dist} ) + 1e-12 ) )")
-            else:
-                args = _split_two_args(toks, i + 2, j)
-                if args is not None:
-                    xy1 = pt_xy(*args[0])
-                    xy2 = pt_xy(*args[1])
-                    if xy1 is not None and xy2 is not None:
-                        fmt = (_HAVERSINE_SQL if u == "ST_DISTANCESPHERE"
-                               else _EUCLID_SQL)
-                        repl = fmt.format(
-                            lon1=xy1[0], lat1=xy1[1],
-                            lon2=xy2[0], lat2=xy2[1])
-            if repl is not None:
-                edits.append((spans[i][0], spans[j][1], repl))
-                i = j + 1
-                continue
-        i += 1
-    if not edits:
-        return None
-    out = sql
-    for s, e, txt in reversed(edits):
-        out = out[:s] + txt + out[e:]
-    return out
-
-
-def _split_two_args(toks, lo, hi):
-    """toks[lo:hi] = contents of a call; split on the single top-level
-    comma -> ((a_lo, a_hi), (b_lo, b_hi)) or None."""
-    d = 0
-    cut = None
-    for j in range(lo, hi):
-        t = toks[j]
-        if t == "(":
-            d += 1
-        elif t == ")":
-            d -= 1
-        elif d == 0 and t == ",":
-            if cut is not None:
-                return None
-            cut = j
-    if cut is None or cut == lo or cut == hi - 1:
-        return None
-    return (lo, cut), (cut + 1, hi)
+    return _splice(sql, spans, _point_call_edits(toks, pt_xy, text))
 
 
 def _split_args(toks, lo, hi):
@@ -2644,79 +2491,39 @@ def _match_point_call(toks, lo, hi):
     if (hi - lo < 6 or toks[lo].upper() != "ST_POINT" or toks[lo + 1] != "("
             or toks[hi - 1] != ")"):
         return None
-    return _split_two_args(toks, lo + 2, hi - 1)
+    args = _split_args(toks, lo + 2, hi - 1)
+    return args if args is not None and len(args) == 2 else None
 
 
 def peephole_scalar(sql: str) -> str | None:
-    """Rewrite ST_DistanceSphere/ST_Distance over two directly
-    constructed ST_Point(x, y) calls into the equivalent native
-    arithmetic (whole-stage codegen: the measured sf10 wall of the
-    haversine bulk kernel drops ~5x by deleting the WKB build +
-    Arrow/python round trip).  Returns the rewritten SQL or None."""
+    """Rewrite ST_DistanceSphere/ST_Distance/ST_DWithin over two
+    directly constructed ST_Point(x, y) calls into the equivalent
+    native arithmetic (whole-stage codegen: the measured sf10 wall of
+    the haversine bulk kernel drops ~5x by deleting the WKB build +
+    Arrow/python round trip).  Each coordinate enters as the DOUBLE the
+    kernel received, with k_point's rule that a NaN coordinate makes
+    the point NULL.  Returns the rewritten SQL (spliced, so comments and
+    hints survive) or None."""
     if not _PEEP_PRECHECK.search(sql):
         return None
-    toks = _tokenize(sql)
+    toks, spans = _tokenize_spans(sql)
     if toks is None:
         return None
-    changed = False
-    out: list[str] = []
-    i = 0
-    n = len(toks)
-    while i < n:
-        t = toks[i]
-        u = t.upper()
-        if u in ("ST_DISTANCESPHERE", "ST_DISTANCE", "ST_DWITHIN") \
-                and i + 1 < n and toks[i + 1] == "(":
-            d = 0
-            j = i + 1
-            while j < n:
-                if toks[j] == "(":
-                    d += 1
-                elif toks[j] == ")":
-                    d -= 1
-                    if d == 0:
-                        break
-                j += 1
-            if j < n:
-                def _span(s):
-                    inner = _render(toks[s[0]:s[1]])
-                    return peephole_scalar(inner) or inner
 
-                repl = None
-                if u == "ST_DWITHIN":
-                    parts = _split_args(toks, i + 2, j)
-                    if parts is not None and len(parts) == 3:
-                        pa = _match_point_call(toks, *parts[0])
-                        pb = _match_point_call(toks, *parts[1])
-                        if pa is not None and pb is not None:
-                            dist = _span(parts[2])
-                            # the kernel compares r <= d + 1e-12
-                            # (algorithms.dwithin _EPS): keep the
-                            # boundary semantics identical
-                            repl = ("( " + _EUCLID_SQL.format(
-                                lon1=_span(pa[0]), lat1=_span(pa[1]),
-                                lon2=_span(pb[0]), lat2=_span(pb[1]))
-                                + f" <= ( ( {dist} ) + 1e-12 ) )")
-                else:
-                    args = _split_two_args(toks, i + 2, j)
-                    if args is not None:
-                        pa = _match_point_call(toks, *args[0])
-                        pb = _match_point_call(toks, *args[1])
-                        if pa is not None and pb is not None:
-                            fmt = (_HAVERSINE_SQL
-                                   if u == "ST_DISTANCESPHERE"
-                                   else _EUCLID_SQL)
-                            repl = fmt.format(
-                                lon1=_span(pa[0]), lat1=_span(pa[1]),
-                                lon2=_span(pb[0]), lat2=_span(pb[1]))
-                if repl is not None:
-                    out.append(repl)
-                    changed = True
-                    i = j + 1
-                    continue
-        out.append(t)
-        i += 1
-    return _render(out) if changed else None
+    def text(lo, hi):
+        # an argument's own text, itself peepholed (calls nest)
+        t = sql[spans[lo][0]:spans[hi - 1][1]]
+        return peephole_scalar(t) or t
+
+    def pt_xy(lo, hi):
+        xy = _match_point_call(toks, lo, hi)
+        if xy is None:
+            return None
+        return tuple(f"nanvl(CAST({text(*s)} AS DOUBLE), "
+                     "CAST(NULL AS DOUBLE))" for s in xy)
+
+    return _splice(sql, spans, _point_call_edits(toks, pt_xy, text,
+                                                 _PEEP_CALLS))
 
 
 # ----------------------------------------------------------------------

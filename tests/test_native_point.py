@@ -90,19 +90,19 @@ def test_guard_rejects_non_point(spark):
 
 def test_certify_point_table_stamps_and_refuses(spark, tmp_path):
     from sedona_db_spark.plans.sql_rewrite import (
-        certify_point_table, _point_table_cols)
+        certify_point_table, _point_table_prop)
     good = [( _pt_wkb(float(i), float(-i)),) for i in range(10)] + [(None,)]
     spark.createDataFrame(good, "geom binary").write.mode("overwrite") \
         .saveAsTable("np_cert_good")
     certify_point_table(spark, "np_cert_good", ["geom"])
-    assert _point_table_cols(spark, "np_cert_good") == ["geom"]
+    assert _point_table_prop(spark, "np_cert_good", "cols") == ["geom"]
 
     bad = good + [(b"\x01\x02\x00\x00\x00" + struct.pack("<dd", 1, 2),)]
     spark.createDataFrame(bad, "geom binary").write.mode("overwrite") \
         .saveAsTable("np_cert_bad")
     with pytest.raises(ValueError, match="refusing to stamp"):
         certify_point_table(spark, "np_cert_bad", ["geom"])
-    assert _point_table_cols(spark, "np_cert_bad") == []
+    assert _point_table_prop(spark, "np_cert_bad", "cols") is None
     spark.sql("DROP TABLE np_cert_good")
     spark.sql("DROP TABLE np_cert_bad")
 
@@ -168,23 +168,34 @@ def test_shadow_certification_refusals(spark):
 
 
 def test_view_shadow_invalidated_by_replace(spark):
-    """certify_point_view's certificate dies with the view definition:
-    CREATE OR REPLACE with different content must fail the fingerprint
-    so the rewrite falls back to the kernel (fail-closed)."""
+    """A view certificate dies with the view definition, for planar
+    (certify_point_view) and geography (certify_geog_point_view) points
+    alike: CREATE OR REPLACE with different content must fail the
+    fingerprint so the rewrite falls back to the kernel (fail-closed)."""
     from sedona_db_spark.plans.sql_rewrite import (
-        certify_point_view, _view_shadow)
-    spark.sql("""CREATE OR REPLACE TEMP VIEW np_vshadow AS
-                 SELECT CAST(id AS DOUBLE) vx, CAST(-id AS DOUBLE) vy,
-                        ST_Point(CAST(id AS DOUBLE), CAST(-id AS DOUBLE)) g
+        certify_geog_point_view, certify_point_view, _view_cert_shadow)
+    kinds = {
+        "point": ("np_vshadow", certify_point_view,
+                  "ST_Point(CAST(id AS DOUBLE), CAST({s}id AS DOUBLE))"),
+        "geog": ("np_vshadow_geog", certify_geog_point_view,
+                 "ST_GeogFromWKT(concat('POINT (', CAST(id AS DOUBLE),"
+                 " ' ', CAST({s}id AS DOUBLE), ')'))"),
+    }
+    for kind, (view, certify, ctor) in kinds.items():
+        other = "geog" if kind == "point" else "point"
+
+        def define(sign):
+            spark.sql(f"""CREATE OR REPLACE TEMP VIEW {view} AS
+                 SELECT CAST(id AS DOUBLE) vx, CAST({sign}id AS DOUBLE) vy,
+                        {ctor.format(s=sign)} g
                  FROM range(10)""")
-    certify_point_view(spark, "np_vshadow", {"g": ("vx", "vy")})
-    assert _view_shadow(spark, "np_vshadow", "g") == ("vx", "vy")
-    spark.sql("""CREATE OR REPLACE TEMP VIEW np_vshadow AS
-                 SELECT CAST(id AS DOUBLE) vx, CAST(id AS DOUBLE) vy,
-                        ST_Point(CAST(id AS DOUBLE), CAST(id AS DOUBLE)) g
-                 FROM range(10)""")
-    assert _view_shadow(spark, "np_vshadow", "g") is None
-    spark.catalog.dropTempView("np_vshadow")
+        define("-")
+        certify(spark, view, {"g": ("vx", "vy")})
+        assert _view_cert_shadow(spark, kind, view, "g") == ("vx", "vy")
+        assert _view_cert_shadow(spark, other, view, "g") is None
+        define("")
+        assert _view_cert_shadow(spark, kind, view, "g") is None
+        spark.catalog.dropTempView(view)
 
 
 def test_certified_scalar_rewrite_fires_and_matches(spark):

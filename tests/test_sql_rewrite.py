@@ -306,7 +306,8 @@ def test_scalar_peephole_distance_sphere(spark):
         "CAST(id * 7 % 170 AS DOUBLE) - 85.0 AS lat1",
         "CAST(id * 13 % 360 AS DOUBLE) - 180.0 AS lon2",
         "CAST(id * 29 % 170 AS DOUBLE) - 85.0 AS lat2",
-        "CASE WHEN id % 997 = 0 THEN NULL ELSE 1.0 END AS nl")
+        "CASE WHEN id % 997 = 0 THEN NULL"
+        " WHEN id % 991 = 0 THEN CAST('NaN' AS DOUBLE) ELSE 1.0 END AS nl")
     df.createOrReplaceTempView("peep_coords")
     native = spark.sql(
         "SELECT ST_DistanceSphere(ST_Point(lon1 * nl, lat1),"
@@ -381,7 +382,8 @@ def test_scalar_peephole_dwithin(spark):
     df = spark.range(0, 3000).selectExpr(
         "CAST(id % 100 AS DOUBLE) AS x1", "CAST(id % 37 AS DOUBLE) AS y1",
         "CAST(id % 91 AS DOUBLE) AS x2", "CAST(id % 53 AS DOUBLE) AS y2",
-        "CASE WHEN id % 499 = 0 THEN NULL ELSE 1.0 END AS nl")
+        "CASE WHEN id % 499 = 0 THEN NULL"
+        " WHEN id % 491 = 0 THEN CAST('NaN' AS DOUBLE) ELSE 1.0 END AS nl")
     df.createOrReplaceTempView("dw_pts")
     native = spark.sql(
         "SELECT ST_DWithin(ST_Point(x1 * nl, y1), ST_Point(x2, y2), 20.0)"
@@ -396,6 +398,37 @@ def test_scalar_peephole_dwithin(spark):
     assert a == b
     assert (sum(v is None for v in a) > 0 and sum(v is True for v in a) > 0
             and sum(v is False for v in a) > 0)
+
+
+def test_scalar_peephole_bigint_and_hints(spark):
+    """The peephole feeds each constructor argument in as the DOUBLE the
+    kernel received, so BIGINT coordinates near the type's range do not
+    overflow (the kernel returns ~1.84e19), and it splices its rewrite
+    into the original text, so /*+ ... */ hints and comments survive."""
+    import pyspark.sql.functions as F
+
+    from sedona_db_spark.functions import get_udf
+    from sedona_db_spark.plans.sql_rewrite import peephole_scalar
+
+    hinted = peephole_scalar(
+        "SELECT /*+ BROADCAST(b) */ -- pairs\n"
+        "ST_Distance(ST_Point(a.x, 0), ST_Point(b.x, 0)) AS d"
+        " FROM t a JOIN t b ON a.k = b.k")
+    assert hinted is not None and "ST_Distance" not in hinted
+    assert "/*+ BROADCAST(b) */" in hinted and "-- pairs\n" in hinted
+
+    df = spark.sql("SELECT 9223372036854775807L AS a,"
+                   " -9223372036854775807L AS b")
+    df.createOrReplaceTempView("peep_big")
+    native = spark.sql(
+        "SELECT ST_Distance(ST_Point(a, 0), ST_Point(b, 0)) AS d"
+        " FROM peep_big")
+    assert "Python" not in \
+        native._jdf.queryExecution().executedPlan().toString()
+    pt, dst = get_udf("ST_Point"), get_udf("ST_Distance")
+    kern = df.select(dst(pt("a", F.lit(0)), pt("b", F.lit(0))).alias("d")) \
+        .first()["d"]
+    assert native.first()["d"] == kern == 1.8446744073709552e19
 
 
 def test_dwithin_peephole_boundary_epsilon(spark):

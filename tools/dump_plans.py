@@ -6,14 +6,44 @@ every declared query of __spark_entry__.queries()).  Runs at
 $SPARK_GRAFT_SF_DIR (default sf0.1) so plans match the bench's AQE/stats
 decisions.  Dump a tree before and after a change, then
 ``diff -r before/ after/`` shows every plan the change moved.
+
+What differs between any two runs is normalized before writing, so two
+dumps of unchanged plans are byte-identical:
+
+- temp directories (``<tmp>/<name>_<random>`` -> ``<tmp>/<name>_*``), uuid
+  part-file names and the checkout root (so ``spark-warehouse`` paths
+  match across checkouts) are masked;
+- session-global counters (expression ids ``#N``, exchange ``plan_id=N``,
+  ``RDD[N]``) are renumbered in order of first appearance within the
+  file, which keeps every reference-equality the plan shows.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+
+_UUID = re.compile(
+    r"[0-9a-f]{8}-?[0-9a-f]{4}-?[0-9a-f]{4}-?[0-9a-f]{4}-?[0-9a-f]{12}")
+_COUNTERS = (r"(?<=#)\d+", r"(?<=plan_id=)\d+", r"(?<=RDD\[)\d+(?=\])")
+
+
+def normalize(txt: str) -> str:
+    """Mask run-specific paths and renumber session-global counters."""
+    tmp = re.escape(tempfile.gettempdir().rstrip("/"))
+    txt = re.sub(tmp + r"/([A-Za-z0-9]+)_[A-Za-z0-9_]{8}(?=[/,\]\s]|$)",
+                 r"<tmp>/\1_*", txt)
+    txt = _UUID.sub("<uuid>", txt).replace(_ROOT, "<checkout>")
+    for pat in _COUNTERS:
+        seen: dict[str, str] = {}
+        txt = re.sub(pat, lambda m: seen.setdefault(
+            m.group(), str(len(seen) + 1)), txt)
+    return txt
 
 
 def main() -> None:
@@ -36,7 +66,7 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(txt)
+            f.write(normalize(txt))
         print(f"wrote {path}")
     spark.stop()
 
